@@ -15,7 +15,7 @@ from __future__ import annotations
 
 import os
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
 TABLE_NAMES = (
@@ -64,43 +64,43 @@ def normalize_events_ts(df: DataFrame) -> DataFrame:
 
 
 # ---------------------------------------------------------------------------
-# iteration-discipline gate (OPTIMIZATION r13, guide §1.2/§2)
+# campaign-scale gate (OPTIMIZATION r13, guide §1.2/§2)
 #
-# The iterative kernels (PageRank, connected components, BFS, LPA) were
-# built with EAGER per-round localCheckpoints plus per-round bookkeeping
-# jobs — the campaign discipline that releases each round's shuffle
-# files before the next round starts (measured necessary at sf100,
-# where ten resident PageRank rounds overran a 76 GB local disk). That
-# discipline costs 1-3 driver-synchronized JOBS PER ROUND, which at
-# small inputs is almost the entire query latency (the data per round
-# is kilobytes; the job barriers are not). The honest, scale-adaptive
-# switch is INPUT SIZE — free driver-side metadata, the same signal a
-# production job would key deployment sizing from: below the threshold
-# the kernels keep the identical dataflow but checkpoint LAZILY
-# (plans stay O(1) via LogicalRDD; materialization folds into the next
-# action), above it they keep the eager+prompt-GC campaign discipline.
-# Results are bit-identical either way — only the action schedule moves.
+# A few operators keep a second form that only pays off when the inputs
+# are large enough for local disk to matter: PageRank stages its edge
+# list to scratch parquet (measured necessary at sf100, where the edge
+# build's shuffle files overran a 76 GB local disk), and
+# graph_assortativity switches to its degree-moments form. The signal
+# is INPUT SIZE — free driver-side metadata, the same signal a
+# production job would key deployment sizing from. Results are
+# bit-identical on either side of the gate.
 
 _EAGER_ITER_ENV = "SPARK_GRAFT_EAGER_ITER_BYTES"
-_EAGER_ITER_DEFAULT = 1_000_000_000  # ≥ ~sf10 inputs keep campaign discipline
+_EAGER_ITER_DEFAULT = 1_000_000_000  # ≥ ~sf10 inputs take the campaign forms
 
 _INPUT_BYTES_CACHE: dict = {}
 
 
 def input_bytes(sf_dir: str) -> int:
-    """Total bytes of the scale-factor directory's inputs — pure
+    """Total parquet payload bytes of the scale-factor directory — pure
     file-metadata (no Spark job). Memoized per directory; file sizes
-    are static for a given fixture. Walks RECURSIVELY (ADVICE r13):
-    a directory-style parquet dataset (standard multi-file Spark
-    output named foo.parquet/) has its bytes in nested part files —
-    a top-level glob would read the ~4 KB dir inode and silently
-    select the lazy schedule at campaign scale."""
+    are static for a given fixture. Counts ``*.parquet`` files and the
+    part files inside ``*.parquet/`` dataset directories (standard
+    multi-file Spark output), at any depth; sidecars such as checksum
+    lists and Hadoop's hidden ``_SUCCESS``/``.crc`` files do not
+    count."""
     if sf_dir not in _INPUT_BYTES_CACHE:
         total = 0
         for root, _dirs, files in os.walk(sf_dir):
             for fn in files:
+                path = os.path.join(root, fn)
+                parts = os.path.relpath(path, sf_dir).split(os.sep)
+                if fn.startswith((".", "_")) or not any(
+                    p.endswith(".parquet") for p in parts
+                ):
+                    continue
                 try:
-                    total += os.path.getsize(os.path.join(root, fn))
+                    total += os.path.getsize(path)
                 except OSError:
                     pass  # racing file rotation — metadata only, best-effort
         _INPUT_BYTES_CACHE[sf_dir] = total
@@ -108,14 +108,12 @@ def input_bytes(sf_dir: str) -> int:
 
 
 def eager_iterations(sf_dir: str) -> bool:
-    """True when the iterative kernels should keep the eager per-round
-    checkpoint + prompt-GC campaign discipline (large inputs, where a
-    round's shuffle is local-disk-relevant); False selects the lazy
-    schedule (same dataflow, fewer job barriers).
+    """True when the inputs are campaign-scale (see the gate comment
+    above), selecting the disk-bounding forms.
 
     Fails CLOSED (ADVICE r13): the gate is a safety valve against the
     sf100 local-disk overrun, so an unreadable/unknown layout
-    (input_bytes == 0) selects the EAGER schedule, not the lazy one."""
+    (input_bytes == 0) selects the campaign forms."""
     try:
         threshold = int(os.environ.get(_EAGER_ITER_ENV, _EAGER_ITER_DEFAULT))
     except ValueError:
@@ -180,7 +178,7 @@ def load_tables(spark: SparkSession, sf_dir: str, *names: str) -> tuple[DataFram
 # between campaigns / sf_dirs. Unpersisting an already-unpersisted or
 # GC'd frame is a no-op, so release is always safe to call.
 
-from typing import Callable, List  # noqa: E402
+from typing import Callable, List, Optional  # noqa: E402
 
 _TRACKED: List[DataFrame] = []
 _RELEASE_HOOKS: List[Callable[[], None]] = []
@@ -301,3 +299,54 @@ def free_local_checkpoint(df: DataFrame) -> None:
         _log.debug(
             "localCheckpoint eager free failed (%s): %s", type(exc).__name__, exc
         )
+
+
+# ---------------------------------------------------------------------------
+# fixpoint loop (shared by the iterative kernels)
+#
+# PageRank, connected components, BFS and label propagation all run
+# their rounds here. Every round is ONE eager localCheckpoint: it
+# materializes the round and cuts the plan back to a LogicalRDD leaf,
+# so plan size stays O(1) at any round count (the r5 lesson: CC's plan
+# grew as 3^rounds under persist alone). A lazy checkpoint would not
+# save the job: under AQE, localCheckpoint(eager=False) runs the
+# round's shuffle stages when it is called. Convergence rides on the
+# same job through DataFrame.observe — no separate count.
+
+
+def fixpoint(
+    state: DataFrame,
+    step: Callable[[DataFrame, int], DataFrame],
+    max_rounds: int,
+    changed: Optional[Callable[[int], Column]] = None,
+) -> DataFrame:
+    """Run ``state = step(state, r)`` for rounds r = 1..max_rounds and
+    return the last state.
+
+    Each round's frame goes through one eager localCheckpoint. With
+    ``changed`` given, ``changed(r)`` is a boolean column over the
+    round's frame; the checkpoint job counts the rows where it holds
+    (DataFrame.observe) and the loop stops after the first round that
+    counts none.
+
+    Ownership: a round's checkpoint is freed as soon as the next round
+    has materialized, and the final round's checkpoint is handed to
+    release_caches() (see the contract at ``_CKPT_TRACKED``: materialize
+    the result before releasing). The initial ``state`` belongs to the
+    caller and is never freed or unpersisted here; neither is anything
+    ``step`` reads besides the previous round."""
+    for r in range(1, max_rounds + 1):
+        nxt = step(state, r)
+        obs = None
+        if changed is not None:
+            obs = Observation()
+            nxt = nxt.observe(obs, F.count_if(changed(r)).alias("changed"))
+        nxt = nxt.localCheckpoint(eager=True)
+        if r > 1:
+            free_local_checkpoint(state)
+        state = nxt
+        if obs is not None and obs.get["changed"] == 0:
+            break
+    if max_rounds > 0:
+        track_final_checkpoint(state)
+    return state

@@ -50,6 +50,7 @@ from typing import Iterator
 
 import pandas as pd
 
+from pyspark import StorageLevel
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
@@ -1266,9 +1267,7 @@ def dedup_cluster_assign(spark: SparkSession, sf_dir: str) -> DataFrame:
     """
     pairs = dedup_ngram_jaccard(spark, sf_dir).select("a_id", "b_id")
     nodes = _shingles_df(spark, sf_dir).select("doc_id")
-    labels = connected_components(
-        spark, pairs, nodes, eager=catalog.eager_iterations(sf_dir)
-    )
+    labels = connected_components(spark, pairs, nodes)
     # cluster_size via aggregate + join, NOT count().over(partitionBy):
     # a WindowExec materializes each cluster in ONE task's memory — a
     # giant component at 100 TB would OOM that task. The aggregate is
@@ -1321,9 +1320,7 @@ def dedup_semantic_keep(spark: SparkSession, sf_dir: str) -> DataFrame:
     nodes = load_table(spark, sf_dir, "embeddings").select(
         F.col("vec_id").alias("doc_id")
     )
-    labels = connected_components(
-        spark, pairs, nodes, eager=catalog.eager_iterations(sf_dir)
-    )
+    labels = connected_components(spark, pairs, nodes)
     sizes = labels.groupBy("cluster_id").agg(F.count("*").alias("cluster_size"))
     return (
         labels.join(sizes, "cluster_id")
@@ -1341,26 +1338,12 @@ def dedup_semantic_keep(spark: SparkSession, sf_dir: str) -> DataFrame:
 HOT_DEGREE = 1024  # in-degree above which a node's label is broadcast
 
 
-# Checkpoint tracking lives in catalog (shared infrastructure — moved
-# in r14 per ADVICE r13; graph.py/stats.py previously imported these
-# underscore-privates from here, an operators→operators layering wart).
-# The release contract is documented at catalog._CKPT_TRACKED: a
-# released checkpoint has NO lineage, so any still-held result frame
-# derived from one is unusable afterwards — callers must materialize
-# (collect/write) results they need BEFORE releasing.
-from data_collection_ieee_spark.catalog import (  # noqa: E402,F401
-    free_local_checkpoint as _free_local_checkpoint,
-    track_final_checkpoint as _track_final_checkpoint,
-)
-
-
 def connected_components(
     spark: SparkSession,
     pairs: DataFrame,
     nodes: DataFrame,
     max_rounds: int = 15,
     hot_degree: int = HOT_DEGREE,
-    eager: bool = True,
 ) -> DataFrame:
     """Connected-component labels (min node id per component) over an
     undirected (a_id, b_id) pair list; returns (doc_id, cluster_id) for
@@ -1375,8 +1358,8 @@ def connected_components(
     40-node chain). Duplicate clusters are near-cliques (diameter
     1-2, converge in 2-3 rounds). Each round is one shuffle join, one
     aggregate, and one label self-join — fully distributed; the only
-    driver-side values are the has-hot-keys flag and the converged?
-    count.
+    driver-side values are the has-hot-keys flag and the per-round
+    changed count, which rides on the round's checkpoint job.
 
     Hot-key hardening (round 5): the propagation join looks up
     labels[v] for every edge (u, v). A high-degree hub — the min-label
@@ -1397,13 +1380,16 @@ def connected_components(
     feeds the cold join, the hot broadcast, AND the merge union), so
     with persist alone the LOGICAL plan grows as ~3^rounds even though
     the data is cached — at graph diameter ≳10 the driver OOMs just
-    building plan strings, before one task runs. Every round therefore
-    goes through localCheckpoint(eager=True), which materializes the
-    same data persist did AND cuts the plan back to a LogicalRDD leaf:
-    plan size is O(1) per round at any diameter. On a cluster the same
-    truncation would ride reliable checkpoint() against the checkpoint
-    dir (executor loss can't recompute a localCheckpoint); the loop
-    structure is unchanged either way."""
+    building plan strings, before one task runs. Rounds therefore run
+    through catalog.fixpoint, whose per-round eager localCheckpoint
+    cuts the plan back to a LogicalRDD leaf: plan size is O(1) per
+    round at any diameter. On a cluster the same truncation would ride
+    reliable checkpoint() against the checkpoint dir (executor loss
+    can't recompute a localCheckpoint); the loop structure is unchanged
+    either way.
+
+    Cache ownership: a `pairs` frame the caller already persisted stays
+    persisted; the kernel persists and releases only what it creates."""
     # Persist the caller's pair pipeline (OPTIMIZATION r14, guide §2.4):
     # `pairs` is typically an expensive build (the affinity explode, the
     # Jaccard postings join, the IVF cosine blocks) and it is read by
@@ -1414,8 +1400,11 @@ def connected_components(
     # pipeline — measured 3x the affinity build inside one
     # graph_connected_users run at sf0.1. Filled once by the probe job
     # below; released with `edges` at kernel exit (the returned labels
-    # are checkpoint-backed and never re-read it).
-    pairs = pairs.persist()
+    # are checkpoint-backed and never re-read it) — unless the caller
+    # persisted it, in which case the cache is theirs (ADVICE r14 #4).
+    owns_pairs = pairs.storageLevel == StorageLevel.NONE
+    if owns_pairs:
+        pairs = pairs.persist()
     edges = (
         pairs.union(pairs.select(F.col("b_id").alias("a_id"), F.col("a_id").alias("b_id")))
         .withColumnsRenamed({"a_id": "u", "b_id": "v"})
@@ -1435,18 +1424,43 @@ def connected_components(
     else:
         edges_cold = edges
 
-    labels = persist_tracked(nodes.withColumn("cluster_id", F.col("doc_id")))
-    cached = labels  # round-0 persisted frame; superseded after round 1
-    ckpt = None  # previous round's localCheckpoint, freed when superseded
-    for _ in range(max_rounds):
+    def step(state: DataFrame, _r: int) -> DataFrame:
+        prev = state.select("doc_id", "cluster_id")
+        # Pointer jump (round-5 fix): edge propagation alone moves a
+        # label ONE hop per round, so a component of diameter d needs d
+        # rounds — a 40-node chain silently exceeded max_rounds and
+        # kept wrong labels. Each round therefore first shortcuts
+        # L[x] <- min(L[x], L[L[x]]) and then propagates the shortcut
+        # labels; jump and propagation alternate, contracting label
+        # chains geometrically, so max_rounds=15 covers diameter ~2^15
+        # instead of 15. The jump reads only the previous round's
+        # checkpoint: jumping on this round's aggregate instead would
+        # compute the propagation join twice inside the round's job,
+        # because the two join sides prune to different columns and
+        # Spark cannot reuse the exchange. The lookup side is unique on
+        # its key; the probe side's key skew (a giant component
+        # funneling onto one label) is exactly the shape AQE's
+        # skew-join splitting handles, since the unique build side can
+        # be replicated per split.
+        lut = prev.select(
+            F.col("doc_id").alias("_jd"), F.col("cluster_id").alias("_jc")
+        )
+        labels = prev.join(lut, prev.cluster_id == F.col("_jd"), "left").select(
+            "doc_id",
+            F.least(
+                F.col("cluster_id"), F.coalesce(F.col("_jc"), F.col("cluster_id"))
+            ).alias("cluster_id"),
+            F.col("cluster_id").alias("_prev"),
+        )
         # Convergence detection rides INSIDE the propagation aggregate:
-        # each node's own row is tagged, so the same groupBy that takes
-        # the neighborhood min also recovers the node's previous label,
-        # and "did anything change" is a filter over the fresh cache —
-        # no separate old-vs-new join, no second scan of the label
-        # table per round.
+        # each node's own row carries its previous label (`_prev`, NULL
+        # on propagated rows), so the same groupBy that takes the
+        # neighborhood min also recovers it, and "did anything change"
+        # is a column of the round's output — no separate old-vs-new
+        # join, no second scan of the label table per round.
+        no_prev = F.lit(None).cast("long").alias("_prev")
         prop = edges_cold.join(labels, edges_cold.v == labels.doc_id).select(
-            F.col("u").alias("doc_id"), "cluster_id", F.lit(False).alias("_self")
+            F.col("u").alias("doc_id"), "cluster_id", no_prev
         )
         if has_hot:
             hot_lbl = labels.join(
@@ -1455,95 +1469,34 @@ def connected_components(
             prop = prop.unionByName(
                 edges_hot.join(
                     F.broadcast(hot_lbl), edges_hot.v == hot_lbl.doc_id
-                ).select(
-                    F.col("u").alias("doc_id"),
-                    "cluster_id",
-                    F.lit(False).alias("_self"),
-                )
+                ).select(F.col("u").alias("doc_id"), "cluster_id", no_prev)
             )
-        stepped = (
-            labels.select("doc_id", "cluster_id", F.lit(True).alias("_self"))
-            .unionByName(prop)
+        return (
+            labels.unionByName(prop)
             .groupBy("doc_id")
             .agg(
                 F.min("cluster_id").alias("cluster_id"),
-                F.min(F.when(F.col("_self"), F.col("cluster_id"))).alias("_old"),
-            )
-        )
-        # materializes the half-round AND truncates lineage (docstring
-        # above); also lets the self-join below read the aggregate once
-        # instead of recomputing it on both join sides.
-        # Small-input schedule (OPTIMIZATION r13, guide §1.2): below
-        # the caller's input gate (eager=False) the checkpoint is LAZY
-        # — the round's single `changed` count below materializes it
-        # together with `merged`, collapsing the round's three
-        # driver-synchronized jobs into one. Labels are identical (the
-        # min-label fixpoint is schedule-independent).
-        stepped = stepped.localCheckpoint(eager=eager)
-        # Pointer jump (round-5 fix): edge propagation alone moves a
-        # label ONE hop per round, so a component of diameter d needs d
-        # rounds — a 40-node chain silently exceeded max_rounds and
-        # kept wrong labels. Following each propagation with a label
-        # shortcut L[x] <- min(L[x], L[L[x]]) contracts label chains
-        # geometrically (propagate extends reach, jump doubles it), so
-        # max_rounds=15 now covers diameter ~2^15 instead of 15. The
-        # lookup side is unique on its key; the probe side's key skew
-        # (a giant component funneling onto one label) is exactly the
-        # shape AQE's skew-join splitting handles, since the unique
-        # build side can be replicated per split.
-        lut = stepped.select(
-            F.col("doc_id").alias("_jd"), F.col("cluster_id").alias("_jc")
-        )
-        merged = (
-            stepped.join(lut, stepped.cluster_id == F.col("_jd"), "left")
-            .select(
-                "doc_id",
-                F.least(
-                    F.col("cluster_id"), F.coalesce(F.col("_jc"), F.col("cluster_id"))
-                ).alias("_new"),
-                "_old",
+                F.min("_prev").alias("_old"),
             )
             .select(
                 "doc_id",
-                F.col("_new").alias("cluster_id"),
-                (F.col("_new") < F.col("_old")).alias("_changed"),
+                "cluster_id",
+                (F.col("cluster_id") < F.col("_old")).alias("_changed"),
             )
         )
-        merged = merged.localCheckpoint(eager=eager)
-        if eager:
-            changed = merged.filter(F.col("_changed")).limit(1).count()
-        else:
-            # FULL count (no limit): a limit would take(1) a lazily
-            # checkpointed RDD — a partial materialization that leaves
-            # the rest of the checkpoint to recompute from truncated
-            # lineage. The full count is the round's one job and
-            # materializes merged (and stepped behind it) completely.
-            changed = merged.filter(F.col("_changed")).count()
-        # the checkpoints materialized the round, so the superseded
-        # round's storage can go — keeps executor storage at ≤2 label
-        # tables however many rounds convergence takes
-        if cached is not None:
-            cached.unpersist()
-            cached = None
-        if ckpt is not None:
-            _free_local_checkpoint(ckpt)
-        _free_local_checkpoint(stepped)
-        ckpt = merged
-        labels = merged.select("doc_id", "cluster_id")
-        if changed == 0:
-            break
+
+    labels = catalog.fixpoint(
+        nodes.withColumn("cluster_id", F.col("doc_id")),
+        step,
+        max_rounds,
+        changed=lambda _r: F.col("_changed"),
+    ).select("doc_id", "cluster_id")
     edges.unpersist()
-    pairs.unpersist()
+    if owns_pairs:
+        pairs.unpersist()
     if has_hot:
         edges_hot.unpersist()
         edges_cold.unpersist()
-    if ckpt is not None:
-        # the returned labels read the final round's checkpoint blocks;
-        # release_caches() frees them with everything else. NOTE the
-        # contract at _CKPT_TRACKED: after release, this result (and
-        # anything derived from it) is unrecoverable — materialize
-        # before releasing.
-        _track_final_checkpoint(ckpt)
     return labels
 
 

@@ -13,8 +13,9 @@ canonical beyond-one-pass dataflow).
 Scale notes: edge derivation is one shuffle join + distinct; PageRank
 iterations are join + groupBy per round over the edge list — the
 standard distributed formulation whose cost is O(E) per round,
-hash-partitioned on node ids, with per-round `localCheckpoint` to keep
-the plan O(1) like the CC kernel (dedup.py:1284). Rank mass is
+hash-partitioned on node ids, with rounds run through the shared
+`catalog.fixpoint` loop, whose per-round `localCheckpoint` keeps the
+plan O(1) like the CC kernel (dedup.py `connected_components`). Rank mass is
 accumulated in DECIMAL(38,18), so every round's sums are
 order-independent and the whole fixed-point is bit-deterministic
 across cluster layouts — float groupBy sums would make PageRank
@@ -23,9 +24,10 @@ nondeterministic run-to-run.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession, Window
+from pyspark.sql import DataFrame, Observation, SparkSession, Window
 from pyspark.sql import functions as F
 
+from data_collection_ieee_spark import catalog
 from data_collection_ieee_spark.catalog import load_table
 from data_collection_ieee_spark.registry import query
 
@@ -112,12 +114,26 @@ def graph_degree_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+def _prompt_gc(spark: SparkSession) -> None:
+    """Release dead shuffle files and checkpoint blocks NOW. Lineage
+    truncation makes a finished round's files unreachable, but the
+    ContextCleaner only drops them after a driver GC, so at sf100
+    (600M-edge graph, ~10 GB shuffle per round) every round's files
+    otherwise stay resident at once — measured filling a 76 GB local
+    disk before any cleanup fired. Same prompt-cleanup device as the
+    pair-pass campaign (dedup._run_pair_passes). Callers gate it on
+    `_GC_EDGE_THRESHOLD`."""
+    import gc
+
+    gc.collect()  # drop py4j refs to the prior rounds' plans
+    spark._jvm.System.gc()
+
+
 def pagerank(
     spark: SparkSession,
     edges: DataFrame,
     iters: int = _PR_ITERS,
     damping: float = _DAMPING,
-    eager: bool = True,
 ) -> DataFrame:
     """Distributed PageRank on an undirected edge list (symmetrized
     internally): returns (node, rank_scaled, rank). Fixed iteration
@@ -141,92 +157,13 @@ def pagerank(
     rational damping. Quantization loses < (N+E)/10^17 of mass per
     round — ~10^-11 at sf0.1, invisible at the 10^-9 output rounding.
     Symmetrization removes dangling nodes by construction (every node
-    that appears has an outgoing edge). `localCheckpoint` per round
-    truncates lineage so the plan stays O(1) across iterations (the
-    CC-kernel lesson, dedup.py:1315)."""
-    # Stage the DISTINCT edge list to scratch parquet as its own job
-    # and release the build shuffles before anything else runs: the
-    # lineitem⋈orders + distinct pipeline holds ~20-40 GB of shuffle
-    # files at the 600M-edge scale, and letting it stay resident under
-    # the degree/repartition/cache stages below overran the local disk
-    # twice before this split (same staged-job device as the pair-pass
-    # campaign). The scratch file is the compact columnar edge table
-    # (~5 GB at sf100) a production deployment would materialize once
-    # per graph refresh anyway.
-    import os as _os
-    import shutil as _shutil
-    import tempfile as _tempfile
-
-    spark = edges.sparkSession
-    if not eager:
-        # Small-input schedule (OPTIMIZATION r13, guide §1.2): the
-        # scratch-parquet staging job, the metadata count, and the
-        # per-round EAGER checkpoints exist to bound local disk at
-        # campaign scale (each is a driver-synchronized job). Below the
-        # input gate (catalog.eager_iterations) the identical dataflow
-        # runs off a tracked columnar persist with LAZY per-round
-        # checkpoints: every round still truncates lineage (plan stays
-        # O(1)), but materialization folds into the caller's single
-        # action. Ranks are bit-identical — integer fixed-point sums
-        # are order-independent, so only the job schedule moves.
-        from data_collection_ieee_spark.catalog import persist_tracked
-
-        return _pagerank_rounds(
-            spark, persist_tracked(edges), iters, damping, eager=False
-        )
-    scratch = _os.path.join(
-        _tempfile.gettempdir(),
-        "dcis_graph_edges",
-        spark.sparkContext.applicationId,
-    )
-    _shutil.rmtree(scratch, ignore_errors=True)
-    # NB: scratch lives under the DRIVER's tempdir, which reaches the
-    # executors only because driver and executors share a filesystem in
-    # local mode; a cluster deployment would point this at a shared
-    # scratch root (spark.local.dir-style setting or object store).
-    edges.write.mode("overwrite").parquet(scratch)
-    # try/finally so the scratch dir (GBs at sf100) and the static edge
-    # cache never leak when an iteration dies mid-loop (ADVICE r10)
-    try:
-        return _pagerank_rounds(spark, scratch, iters, damping)
-    finally:
-        _shutil.rmtree(scratch, ignore_errors=True)
-
-
-def _pagerank_rounds(
-    spark: SparkSession,
-    scratch,
-    iters: int,
-    damping: float,
-    eager: bool = True,
-) -> DataFrame:
-    """Iteration body of :func:`pagerank`. ``scratch`` is the staged
-    edge-list parquet path (eager/campaign mode — owns the static-edge
-    persist lifecycle, always unpersisted even on failure) or an
-    already-persisted edge DataFrame (lazy/small-input mode — caches are
-    tracked and released by catalog.release_caches(), and per-round
-    checkpoints are lazy so the caller's action runs the whole loop as
-    one job)."""
-    import gc as _gc
-
-    if eager:
-        staged = spark.read.parquet(scratch)
-        # row count from parquet metadata (no data scan): gates every
-        # prompt-GC below — a full JVM collection per round is ~0.5 s of
-        # pure tax on a small graph (measured 10.6 → 18.8 s at sf0.1)
-        # and only pays when a round's shuffle is disk-relevant
-        m_edges = staged.count()
-        big_graph = m_edges > _GC_EDGE_THRESHOLD
-    else:
-        staged = scratch  # persisted DataFrame, materialized on first use
-        big_graph = False
-    if big_graph:
-        _gc.collect()
-        spark._jvm.System.gc()  # drop the edge-build shuffle files NOW
-    sym = staged.select(
+    that appears has an outgoing edge). Rounds run through
+    catalog.fixpoint, whose per-round localCheckpoint keeps the plan
+    O(1) across iterations (the CC-kernel lesson, dedup.py)."""
+    sym = edges.select(
         F.col("cust_node").alias("src"), F.col("supp_node").alias("dst")
     ).unionByName(
-        staged.select(
+        edges.select(
             F.col("supp_node").alias("src"), F.col("cust_node").alias("dst")
         )
     )
@@ -243,31 +180,33 @@ def _pagerank_rounds(
     # while the compressed columnar cache of three numeric columns is
     # a fraction of that and mostly stays in executor memory.
     deg = sym.groupBy("src").agg(F.count("*").alias("out_deg"))
-    edges_w = sym.join(deg, "src").select("src", "dst", "out_deg").repartition("src")
-    if eager:
-        edges_w = edges_w.persist()
-    else:
-        from data_collection_ieee_spark.catalog import persist_tracked
-
-        # released by catalog.release_caches(): the lazy rounds below
-        # still read this cache until the CALLER's action runs, so an
-        # unconditional unpersist-in-finally (the eager path's contract)
-        # would force a full edge rebuild per round
-        edges_w = persist_tracked(edges_w)
+    edges_w = (
+        sym.join(deg, "src").select("src", "dst", "out_deg").repartition("src").persist()
+    )
+    # try/finally: the final ranks are checkpointed (no lineage into
+    # edges_w), so the static edge cache is dropped deterministically —
+    # and MUST be even on failure: a bare persist() would otherwise sit
+    # in the CacheManager until session end (ADVICE r10)
     try:
-        if eager:
-            edges_w.count()  # materialize the static side eagerly, once
-        nodes = deg.select(F.col("src").alias("node")).localCheckpoint(
-            eager=eager
+        # The node checkpoint is the job that fills the edge cache:
+        # edges_w is already hash-partitioned on src, so grouping it by
+        # src adds no exchange. Node and directed-edge counts ride on
+        # the same job.
+        shape = Observation()
+        nodes = (
+            edges_w.groupBy("src")
+            .agg(F.max("out_deg").alias("out_deg"))
+            .observe(
+                shape,
+                F.count(F.lit(1)).alias("n"),
+                F.sum("out_deg").alias("m"),
+            )
+            .select(F.col("src").alias("node"))
+            .localCheckpoint(eager=True)
         )
-        n = nodes.count()  # bounded scalar: node count (materializes the
-        # lazy checkpoint too — one job instead of two in lazy mode)
-        # the edge-list BUILD (join + distinct over the raw fact
-        # tables) is tens of GB of now-dead shuffle at sf100 — release
-        # it before the iteration loop adds its own per-round footprint
-        if big_graph:
-            _gc.collect()
-            spark._jvm.System.gc()
+        catalog.track_final_checkpoint(nodes)
+        n = shape.get["n"]
+        big_graph = shape.get["m"] // 2 > _GC_EDGE_THRESHOLD  # m counts both directions
         # exact rational damping num/den (0.85 → 17/20); base term and
         # the init rank are exact Python-int floors — no engine's
         # decimal-division rounding is ever involved
@@ -277,68 +216,39 @@ def _pagerank_rounds(
             _Fr(damping).limit_denominator(1_000_000).as_integer_ratio()
         )
         base = ((den - num) * _PR_SCALE) // (den * n)
-        ranks = nodes.select(
-            "node", F.lit(_PR_SCALE // n).cast("long").alias("rank_scaled")
-        )
-        damp_expr = (
-            f"{num}L * (coalesce(s, 0L) div {den}) + "
-            f"({num}L * (coalesce(s, 0L) % {den})) div {den}"
-        )
-        _lazy_rounds = []
-        for _ in range(iters):
+        damp_expr = f"{num}L * (s div {den}) + ({num}L * (s % {den})) div {den}"
+
+        def step(ranks: DataFrame, _r: int) -> DataFrame:
+            # before round 1 this drops the edge build's shuffle files
+            # (tens of GB at sf100); before round r, those of round r-1
+            if big_graph:
+                _prompt_gc(spark)
             contrib = edges_w.join(
                 ranks, edges_w.src == ranks.node
             ).select("dst", F.expr("rank_scaled div out_deg").alias("c"))
-            summed = contrib.groupBy("dst").agg(F.sum("c").alias("s"))
-            ranks = nodes.join(
-                summed, nodes.node == summed.dst, "left"
-            ).select(
-                "node",
-                (F.lit(base).cast("long") + F.expr(damp_expr)).alias(
-                    "rank_scaled"
-                ),
+            # every node is some edge's dst (the edge list is
+            # symmetrized), so the per-dst sums cover the whole node set
+            # with no join back to it
+            return (
+                contrib.groupBy("dst")
+                .agg(F.sum("c").alias("s"))
+                .select(
+                    F.col("dst").alias("node"),
+                    (F.lit(base).cast("long") + F.expr(damp_expr)).alias(
+                        "rank_scaled"
+                    ),
+                )
             )
-            # truncate lineage: without this the plan doubles per round.
-            # Lazy mode keeps the truncation (LogicalRDD leaf either
-            # way) but defers materialization to the caller's action —
-            # ten rounds collapse into one job
-            ranks = ranks.localCheckpoint(eager=eager)
-            if not eager:
-                _lazy_rounds.append(ranks)
-            # release the PREVIOUS round's shuffle files and checkpoint
-            # blocks NOW: lineage truncation makes them unreachable,
-            # but the ContextCleaner only drops them after a driver GC,
-            # so ten rounds of the |E|-row contrib shuffle otherwise
-            # stay resident simultaneously — measured filling a 76 GB
-            # local disk at sf100 (600M-edge graph, ~10 GB
-            # shuffle/round) before any cleanup fired. Same
-            # prompt-cleanup device as the pair-pass campaign
-            # (_run_pair_passes); on a cluster this is shuffle disk
-            # reclaimed per round instead of held for the whole job.
-            # Gated: pure tax when a round's shuffle is megabytes.
-            if big_graph:
-                _gc.collect()  # drop py4j refs to the prior round plan
-                spark._jvm.System.gc()
-    finally:
-        # the final ranks are checkpointed (no lineage into edges_w),
-        # so the static edge cache can be dropped deterministically —
-        # and MUST be even on failure: a bare persist() would otherwise
-        # sit in the CacheManager until session end, shadowing every
-        # later query's memory. Lazy mode MUST NOT drop it here (the
-        # unmaterialized rounds still read it); persist_tracked hands
-        # it to release_caches() instead.
-        if eager:
-            edges_w.unpersist()
-    if not eager:
-        # lazy checkpoints materialize at the caller's action and have
-        # no lineage afterwards; hand their storage to release_caches()
-        from data_collection_ieee_spark.catalog import (
-            track_final_checkpoint as _track_final_checkpoint,
-        )
 
-        _track_final_checkpoint(nodes)
-        for _ck in _lazy_rounds:
-            _track_final_checkpoint(_ck)
+        ranks = catalog.fixpoint(
+            nodes.select(
+                "node", F.lit(_PR_SCALE // n).cast("long").alias("rank_scaled")
+            ),
+            step,
+            iters,
+        )
+    finally:
+        edges_w.unpersist()
     # expose both the exact scaled rank (what the oracle compares /
     # the top-k orders by) and the double view consumers expect
     return ranks.select(
@@ -413,13 +323,49 @@ def graph_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
     tests/test_round9_ops.py additionally pins the full rank vector
     against an independent numpy power iteration, plus the Σrank=1
     mass invariant."""
-    from data_collection_ieee_spark.catalog import eager_iterations
+    import os
+    import shutil
+    import tempfile
 
-    ranks = pagerank(
-        spark,
-        _purchase_edges(spark, sf_dir),
-        eager=eager_iterations(sf_dir),
-    )
+    edges = _purchase_edges(spark, sf_dir)
+    scratch = None
+    if catalog.eager_iterations(sf_dir):
+        # Campaign scale: stage the DISTINCT edge list to scratch
+        # parquet as its own job and release the build shuffles before
+        # anything else runs. The lineitem⋈orders + distinct pipeline
+        # holds ~20-40 GB of shuffle files at the 600M-edge scale, and
+        # letting it stay resident under the degree/repartition/cache
+        # stages overran the local disk twice before this split (same
+        # staged-job device as the pair-pass campaign). The scratch
+        # file is the compact columnar edge table (~5 GB at sf100) a
+        # production deployment would materialize once per graph
+        # refresh anyway. Below the gate the staging job is pure
+        # overhead (most of pagerank's 0.87x at sf0.1 in r13).
+        # NB: scratch lives under the DRIVER's tempdir, which reaches
+        # the executors only because driver and executors share a
+        # filesystem in local mode; a cluster deployment would point
+        # this at a shared scratch root.
+        scratch = os.path.join(
+            tempfile.gettempdir(),
+            "dcis_graph_edges",
+            spark.sparkContext.applicationId,
+        )
+        shutil.rmtree(scratch, ignore_errors=True)
+        staged = Observation()
+        edges.observe(staged, F.count(F.lit(1)).alias("m")).write.mode(
+            "overwrite"
+        ).parquet(scratch)
+        if staged.get["m"] > _GC_EDGE_THRESHOLD:
+            _prompt_gc(spark)
+        edges = spark.read.parquet(scratch)
+    # try/finally so the scratch dir (GBs at sf100) never leaks when an
+    # iteration dies mid-loop (ADVICE r10); the returned ranks are
+    # checkpointed and never re-read it
+    try:
+        ranks = pagerank(spark, edges)
+    finally:
+        if scratch is not None:
+            shutil.rmtree(scratch, ignore_errors=True)
     # distributed top-k: orderBy+limit compiles to TakeOrderedAndProject
     # (per-partition heads merged on one reducer) — a partitionless
     # row_number window over the full node table would single-thread
@@ -491,37 +437,25 @@ def graph_bfs_hops(spark: SparkSession, sf_dir: str) -> DataFrame:
     from the biggest hub", the reachability profile query behind
     influence radius and cache-warming decisions.
 
-    Distributed frontier BFS: per hop, ONE equi-join of the (static,
-    pre-partitioned, checkpointed) edge list against the current
-    frontier plus a left-anti against the visited set — O(E) work per
-    hop keyed on node id, never an all-pairs or path enumeration. The
-    visited/frontier frames are localCheckpoint-ed per round so the
-    plan stays O(1) across hops (same lineage discipline as
-    :func:`pagerank` and the CC kernel, dedup.py). The per-hop
-    ``isEmpty`` is a bounded driver scalar — the standard iterative-
-    dataflow convergence check. The oracle is a recursive CTE over
-    (node, hop) pairs, which DuckDB bounds at V x hops rows; the
-    Spark side never materializes that relation.
+    Distributed frontier BFS over one `visited(node, hop)` state: per
+    hop, ONE equi-join of the (static, pre-partitioned, checkpointed)
+    edge list against the frontier — the rows with `hop == r - 1` —
+    plus a left-anti against the visited set — O(E) work per hop keyed
+    on node id, never an all-pairs or path enumeration. Hops run
+    through `catalog.fixpoint` (one checkpoint job per hop, plan O(1)
+    across hops), whose observed count of `hop == r` rows is the
+    convergence check: an empty frontier ends the loop with no extra
+    job. The oracle is a recursive CTE over (node, hop) pairs, which
+    DuckDB bounds at V x hops rows; the Spark side never materializes
+    that relation.
 
     Hop cap 8 (_BFS_MAX_HOPS): purchase graphs are small-diameter by
     construction (bipartite, dense hubs); the cap bounds worst-case
     rounds on pathological chains, and capped-out nodes report -1
     exactly like the oracle's capped recursion.
     """
-    from data_collection_ieee_spark.catalog import eager_iterations
-    from data_collection_ieee_spark.catalog import (
-        track_final_checkpoint as _track_final_checkpoint,
-    )
-
-    # Small-input schedule (OPTIMIZATION r13, guide §1.2): below the
-    # input gate every per-hop bookkeeping job (eager frontier/visited
-    # checkpoints, the cached-blocks isEmpty probe) folds into ONE
-    # full count per hop — the count doubles as the convergence check
-    # AND the materialization of the hop's lazy checkpoint. isEmpty()
-    # must NOT be used on a lazy checkpoint (it take(1)s, a partial
-    # materialization). Eager/campaign mode is unchanged.
-    eager = eager_iterations(sf_dir)
     edges = _purchase_edges(spark, sf_dir)
+    shape = Observation()
     sym = (
         edges.select(F.col("cust_node").alias("src"), F.col("supp_node").alias("dst"))
         .unionByName(
@@ -530,14 +464,12 @@ def graph_bfs_hops(spark: SparkSession, sf_dir: str) -> DataFrame:
             )
         )
         .repartition("src")
-        .localCheckpoint(eager=eager)
+        .observe(shape, F.count(F.lit(1)).alias("m"))
+        .localCheckpoint(eager=True)
     )
-    if not eager:
-        _track_final_checkpoint(sym)
-    # cached-blocks scan, bounded: gates the per-hop prompt-GC below
-    # (below the input gate the scan count is skipped outright — the
-    # hub job materializes sym)
-    big_graph = eager and sym.count() > _GC_EDGE_THRESHOLD
+    # the returned histogram reads sym at the caller's action
+    catalog.track_final_checkpoint(sym)
+    big_graph = shape.get["m"] > _GC_EDGE_THRESHOLD
     hub = (
         sym.filter(F.col("src") % 2 == 1)
         .groupBy("src")
@@ -546,45 +478,31 @@ def graph_bfs_hops(spark: SparkSession, sf_dir: str) -> DataFrame:
         .limit(1)
         .collect()  # bounded: exactly one row (the source node id)
     )[0]["src"]
-    frontier = spark.createDataFrame([(hub,)], "node long").localCheckpoint(
-        eager=eager
-    )
-    if not eager:
-        # track the 1-row seed like nxt/visited (ADVICE r13: untracked,
-        # its blocks leaked until session end in long-lived sessions)
-        _track_final_checkpoint(frontier)
-    visited = frontier.select("node", F.lit(0).alias("hop"))
-    for hop in range(1, _BFS_MAX_HOPS + 1):
+
+    def step(visited: DataFrame, r: int) -> DataFrame:
+        # before hop r, release hop r-1's shuffle files (see _prompt_gc)
+        if big_graph:
+            _prompt_gc(spark)
+        frontier = visited.filter(F.col("hop") == r - 1).select("node")
         nxt = (
             sym.join(frontier, sym.src == frontier.node)
             .select(F.col("dst").alias("node"))
             .distinct()
             .join(visited.select("node"), "node", "left_anti")
-            .localCheckpoint(eager=eager)
         )
-        if eager:
-            if nxt.isEmpty():
-                break
-        else:
-            _track_final_checkpoint(nxt)
-            if nxt.count() == 0:  # full count: materializes the checkpoint
-                break
-        visited = visited.unionByName(
-            nxt.select("node", F.lit(hop).alias("hop"))
-        ).localCheckpoint(eager=eager)
-        if not eager:
-            _track_final_checkpoint(visited)
-        frontier = nxt
-        # prompt-release the previous hop's shuffle files + checkpoint
-        # blocks (see pagerank: lineage truncation alone leaves them
-        # for an eventual GC; at 600M edges each hop's join shuffle is
-        # ~10 GB of local disk held simultaneously otherwise). Gated
-        # on edge count like pagerank — pure tax on small graphs.
-        if big_graph:
-            import gc as _gc
+        return visited.unionByName(nxt.select("node", F.lit(r).alias("hop")))
 
-            _gc.collect()
-            spark._jvm.System.gc()
+    # seeded from a one-row Range, not createDataFrame: a LocalRelation
+    # seed made the first hop take 2x as long (sf0.01, 4 cores)
+    seed = spark.range(1).select(
+        F.lit(hub).cast("long").alias("node"), F.lit(0).alias("hop")
+    )
+    visited = catalog.fixpoint(
+        seed,
+        step,
+        _BFS_MAX_HOPS,
+        changed=lambda r: F.col("hop") == r,
+    )
     nodes = sym.select(F.col("src").alias("node")).distinct()
     return (
         nodes.join(visited, "node", "left")
@@ -685,7 +603,8 @@ def graph_assortativity(spark: SparkSession, sf_dir: str) -> DataFrame:
         deg = persist_tracked(edges.groupBy("src").agg(F.count("*").alias("d")))
         dd = F.col("d").cast("decimal(19,0)")
         m1 = deg.groupBy().agg(
-            F.sum(F.col("d").cast(big)).cast("long").alias("n"),
+            # COUNT(*) in the xy form is 0 on an empty graph; SUM is NULL
+            F.coalesce(F.sum(F.col("d").cast(big)), F.lit(0)).cast("long").alias("n"),
             F.sum((dd * F.col("d")).cast(big)).cast("double").alias("sx"),
             F.sum((dd * F.col("d")).cast(big)).cast("double").alias("sy"),
             F.sum((dd * F.col("d") * F.col("d")).cast(big))
@@ -1330,9 +1249,9 @@ def graph_connected_users(spark: SparkSession, sf_dir: str) -> DataFrame:
     routed through the salted two-level bucket-pair build so no
     single row or task ever carries a whole hot part (VERDICT r11
     #3). Labels come from the shared
-    `connected_components` kernel (dedup.py:1375) — min-label
-    propagation + pointer jumping, hot-hub broadcast split, per-round
-    localCheckpoint — whose 100 TB evidence lives with
+    `connected_components` kernel (dedup.py) — min-label
+    propagation + pointer jumping, hot-hub broadcast split, rounds on
+    catalog.fixpoint — whose 100 TB evidence lives with
     dedup_cluster_assign. The oracle is an independent formulation:
     DuckDB recursive-CTE min-label closure (labels only travel toward
     larger node ids, which cannot block a component's true min since
@@ -1347,11 +1266,7 @@ def graph_connected_users(spark: SparkSession, sf_dir: str) -> DataFrame:
         .unionAll(pairs.select(F.col("b_id").alias("doc_id")))
         .distinct()
     )
-    from data_collection_ieee_spark.catalog import eager_iterations
-
-    comp = connected_components(
-        spark, pairs, nodes, eager=eager_iterations(sf_dir)
-    )
+    comp = connected_components(spark, pairs, nodes)
     w = Window.partitionBy("cluster_id")
     return comp.select(
         F.col("doc_id").alias("custkey"),
@@ -1415,42 +1330,26 @@ def graph_label_propagation(spark: SparkSession, sf_dir: str) -> DataFrame:
     symmetrized edge list (hash on node id), a (node, label) count
     with map-side combine, then the argmax pick as a max-of-struct
     aggregate (c, -label) — NO window over nodes, so a hub's votes
-    never sort in one task; per-round `localCheckpoint` truncates the
-    lineage exactly like the CC kernel (dedup.py:1375). Rounds are
-    O(E) shuffles each — the standard distributed LPA cost model —
-    and `_LPA_ROUNDS` bounds latency like `graph_pagerank`'s fixed
-    iteration count."""
-    from data_collection_ieee_spark.catalog import (
-        eager_iterations,
-        persist_tracked,
-    )
-    from data_collection_ieee_spark.catalog import (
-        track_final_checkpoint as _track_final_checkpoint,
-    )
-
-    # Small-input schedule (OPTIMIZATION r13, guide §1.2): per-round
-    # checkpoints stay (lineage truncation) but turn lazy below the
-    # input gate, so the four rounds run as one job at the caller's
-    # action instead of four driver-synchronized eager jobs. Labels are
-    # identical — the argmax is an exact max-of-struct.
-    eager = eager_iterations(sf_dir)
+    never sort in one task; rounds run through `catalog.fixpoint`, whose
+    per-round checkpoint truncates the lineage exactly like the CC
+    kernel's. Rounds are O(E) shuffles each — the standard distributed
+    LPA cost model — and `_LPA_ROUNDS` bounds latency like
+    `graph_pagerank`'s fixed iteration count."""
     pairs = _affinity_edge_list(spark, sf_dir)
-    sym = persist_tracked(
+    sym = catalog.persist_tracked(
         pairs.select(F.col("a_id").alias("u"), F.col("b_id").alias("v"))
         .unionAll(
             pairs.select(F.col("b_id").alias("u"), F.col("a_id").alias("v"))
         )
     )
-    labels = sym.select(F.col("u").alias("node")).distinct().select(
-        "node", F.col("node").alias("l")
-    )
-    for _r in range(_LPA_ROUNDS):
+
+    def step(labels: DataFrame, _r: int) -> DataFrame:
         votes = (
             sym.join(labels, sym.v == labels.node)
             .groupBy(sym.u, F.col("l").alias("nl"))
             .agg(F.count("*").alias("c"))
         )
-        labels = (
+        return (
             votes.groupBy("u")
             .agg(
                 F.max(
@@ -1462,10 +1361,15 @@ def graph_label_propagation(spark: SparkSession, sf_dir: str) -> DataFrame:
                 ).alias("m")
             )
             .select(F.col("u").alias("node"), F.col("m.nl").alias("l"))
-            .localCheckpoint(eager=eager)
         )
-        if not eager:
-            _track_final_checkpoint(labels)
+
+    labels = catalog.fixpoint(
+        sym.select(F.col("u").alias("node")).distinct().select(
+            "node", F.col("node").alias("l")
+        ),
+        step,
+        _LPA_ROUNDS,
+    )
     sizes = labels.groupBy("l").agg(F.count("*").alias("community_size"))
     return labels.join(sizes, "l").select(
         F.col("node").alias("custkey"),

@@ -81,8 +81,8 @@ def test_cc_checkpoints_released(spark):
 
 
 def test_eager_checkpoint_free_actually_drops_blocks(spark):
-    """_free_local_checkpoint reaches the checkpointed RDD through a
-    py4j internal accessor; if a Spark upgrade shifts it, every eager
+    """catalog.free_local_checkpoint reaches the checkpointed RDD through
+    a py4j internal accessor; if a Spark upgrade shifts it, every eager
     free would silently no-op and executor storage would grow to
     O(rounds) label tables. This canary asserts (a) a freed frame's
     blocks really leave getPersistentRDDs and (b) the failure counter
@@ -110,3 +110,21 @@ def test_release_skips_unmaterialized_lazy_checkpoint(spark):
     assert df.count() == 50  # still computable — storage level intact
     # now materialized but no longer tracked; free eagerly to clean up
     catalog.free_local_checkpoint(df)
+
+
+def test_release_frees_materialized_lazy_checkpoint(spark):
+    """A LAZY localCheckpoint tracked and then computed by an action
+    is checkpointed by the time release_caches() runs; release must
+    free its blocks (the isCheckpointed() branch, which stats.py's
+    lazily checkpointed counts frame relies on)."""
+    catalog.release_caches()
+    base = _n_persistent(spark)
+    fails_before = catalog.ckpt_free_failures()
+
+    df = spark.range(50).localCheckpoint(eager=False)
+    catalog.track_final_checkpoint(df)
+    assert df.count() == 50  # materializes the checkpoint
+    assert _n_persistent(spark) == base + 1
+    catalog.release_caches()
+    assert _n_persistent(spark) == base
+    assert catalog.ckpt_free_failures() == fails_before
