@@ -133,10 +133,12 @@ def eager_iterations(sf_dir: str) -> bool:
 # no rows, no persisted blocks, no computed results — so a later query
 # reusing it still computes everything from the parquet inputs; this is
 # the same class of metadata reuse as Spark's own session-level
-# FileStatusCache. Keyed by the live session object so a restarted
-# session can never serve stale py4j handles. Deliberately NOT cleared
-# by release_caches(): there is nothing cached to release.
-_TABLE_CACHE: dict = {}
+# FileStatusCache. The memo is an attribute of the session it serves,
+# so a restarted session never serves stale py4j handles and a dropped
+# session is collected with its reader plans. A module-level map keyed
+# by session (even a WeakKeyDictionary) would pin every session: each
+# cached frame references its session. Deliberately NOT cleared by
+# release_caches(): there is nothing cached to release.
 
 
 def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
@@ -148,8 +150,8 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     """
     if name not in TABLE_NAMES:
         raise KeyError(f"unknown table {name!r}; expected one of {TABLE_NAMES}")
-    key = (spark, sf_dir, name)
-    df = _TABLE_CACHE.get(key)
+    memo = vars(spark).setdefault("_dcis_table_cache", {})
+    df = memo.get((sf_dir, name))
     if df is None:
         path = f"{sf_dir}/{name}.parquet"
         if name == "events":
@@ -157,7 +159,7 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
             df = normalize_events_ts(spark.read.parquet(path))
         else:
             df = spark.read.parquet(path)
-        _TABLE_CACHE[key] = df
+        memo[(sf_dir, name)] = df
     return df
 
 
@@ -350,3 +352,26 @@ def fixpoint(
     if max_rounds > 0:
         track_final_checkpoint(state)
     return state
+
+
+# ---------------------------------------------------------------------------
+# edge-list symmetrization (shared by the graph kernels and CC)
+
+
+def symmetrize(
+    edges: DataFrame, a: str, b: str, u: str = "u", v: str = "v"
+) -> DataFrame:
+    """Both orientations of every ``(a, b)`` row, as columns ``(u, v)``:
+    the same multiset as ``select(a, b) UNION ALL select(b, a)`` (a
+    self-loop row appears twice, duplicate rows keep their
+    multiplicity), but from ONE scan of ``edges``. The union form plans
+    the upstream build once per branch and AQE does not reuse the
+    exchange across them: label propagation ran its affinity pair-count
+    map stage twice per run."""
+    z = F.explode(
+        F.array(
+            F.struct(F.col(a).alias(u), F.col(b).alias(v)),
+            F.struct(F.col(b).alias(u), F.col(a).alias(v)),
+        )
+    ).alias("_z")
+    return edges.select(z).select(f"_z.{u}", f"_z.{v}")

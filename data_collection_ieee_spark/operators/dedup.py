@@ -1393,23 +1393,20 @@ def connected_components(
     # Persist the caller's pair pipeline (OPTIMIZATION r14, guide §2.4):
     # `pairs` is typically an expensive build (the affinity explode, the
     # Jaccard postings join, the IVF cosine blocks) and it is read by
-    # BOTH symmetrization branches below AND by the caller's node frame
-    # (built from this same object, so the CacheManager serves it from
-    # this cache). Unpersisted, the max-degree probe, the round-0 label
-    # build and the edge cache fill each re-ran the full upstream
-    # pipeline — measured 3x the affinity build inside one
-    # graph_connected_users run at sf0.1. Filled once by the probe job
-    # below; released with `edges` at kernel exit (the returned labels
-    # are checkpoint-backed and never re-read it) — unless the caller
-    # persisted it, in which case the cache is theirs (ADVICE r14 #4).
+    # the symmetrized edge cache below (one scan, catalog.symmetrize)
+    # AND by the caller's node frame (built from this same object, so
+    # the CacheManager serves it from this cache). Unpersisted, the
+    # max-degree probe, the round-0 label build and the edge cache fill
+    # each re-ran the full upstream pipeline — measured 3x the affinity
+    # build inside one graph_connected_users run at sf0.1. Filled once
+    # by the probe job below; released with `edges` at kernel exit (the
+    # returned labels are checkpoint-backed and never re-read it) —
+    # unless the caller persisted it, in which case the cache is theirs
+    # (ADVICE r14 #4).
     owns_pairs = pairs.storageLevel == StorageLevel.NONE
     if owns_pairs:
         pairs = pairs.persist()
-    edges = (
-        pairs.union(pairs.select(F.col("b_id").alias("a_id"), F.col("a_id").alias("b_id")))
-        .withColumnsRenamed({"a_id": "u", "b_id": "v"})
-        .persist()
-    )
+    edges = catalog.symmetrize(pairs, "a_id", "b_id").persist()
     deg = edges.groupBy("v").agg(F.count("*").alias("deg"))
     # ONE tiny job decides whether a hot split is needed at all (it also
     # materializes the edges cache); the common no-hub case then runs

@@ -157,16 +157,12 @@ def pagerank(
     rational damping. Quantization loses < (N+E)/10^17 of mass per
     round — ~10^-11 at sf0.1, invisible at the 10^-9 output rounding.
     Symmetrization removes dangling nodes by construction (every node
-    that appears has an outgoing edge). Rounds run through
+    that appears has an outgoing edge); catalog.symmetrize emits both
+    orientations from one scan of `edges`, so the edge build's map
+    stage runs once, not once per orientation. Rounds run through
     catalog.fixpoint, whose per-round localCheckpoint keeps the plan
     O(1) across iterations (the CC-kernel lesson, dedup.py)."""
-    sym = edges.select(
-        F.col("cust_node").alias("src"), F.col("supp_node").alias("dst")
-    ).unionByName(
-        edges.select(
-            F.col("supp_node").alias("src"), F.col("cust_node").alias("dst")
-        )
-    )
+    sym = catalog.symmetrize(edges, "cust_node", "supp_node", "src", "dst")
     # Static-side preparation, ONCE (the GraphX lesson): fold the
     # degree into a per-edge weight and hash-partition the edge list
     # by src before materializing — the persisted partitioning is what
@@ -457,12 +453,7 @@ def graph_bfs_hops(spark: SparkSession, sf_dir: str) -> DataFrame:
     edges = _purchase_edges(spark, sf_dir)
     shape = Observation()
     sym = (
-        edges.select(F.col("cust_node").alias("src"), F.col("supp_node").alias("dst"))
-        .unionByName(
-            edges.select(
-                F.col("supp_node").alias("src"), F.col("cust_node").alias("dst")
-            )
-        )
+        catalog.symmetrize(edges, "cust_node", "supp_node", "src", "dst")
         .repartition("src")
         .observe(shape, F.count(F.lit(1)).alias("m"))
         .localCheckpoint(eager=True)
@@ -572,18 +563,16 @@ def graph_assortativity(spark: SparkSession, sf_dir: str) -> DataFrame:
         persist_tracked,
     )
 
-    e0 = _purchase_edges(spark, sf_dir)
-    edges = e0.select(
-        F.col("cust_node").alias("src"), F.col("supp_node").alias("dst")
-    ).unionByName(
-        e0.select(F.col("supp_node").alias("src"), F.col("cust_node").alias("dst"))
+    edges = catalog.symmetrize(
+        _purchase_edges(spark, sf_dir), "cust_node", "supp_node", "src", "dst"
     )
     big = "decimal(38,0)"
     if eager_iterations(sf_dir):
         # Campaign-scale moments form (OPTIMIZATION r14, VERDICT r13 #6;
         # guide §2.4): the xy formulation below expands the edge build
-        # into THREE duplicate subtrees (edges + two degree joins — the
-        # r13 before-plan showed 12 scans). On the symmetrized graph the
+        # into THREE duplicate subtrees (edges + two degree joins; with
+        # the one-scan catalog.symmetrize that is 6 scans, down from the
+        # two-branch union's 12). On the symmetrized graph the
         # per-edge endpoint-degree sums collapse onto the |V|-row degree
         # table: n = Σd, sx = sy = Σd², sxx = syy = Σd³ (every directed
         # edge contributes its src degree to x exactly once, and the
@@ -594,10 +583,11 @@ def graph_assortativity(spark: SparkSession, sf_dir: str) -> DataFrame:
         # commutative, so the six scalars — and therefore the one
         # output double — are bit-identical to the xy form (oracle- and
         # equality-verified at sf0.01). Below the gate the xy form
-        # stays: at bench scale its duplicate subtrees run CONCURRENTLY
-        # inside one job on idle cores, while this form serializes the
-        # edge/degree materialization ahead of the main job (measured
-        # 1.26x worse at sf0.1 in r13) — strictly less WORK is not
+        # stays: at bench scale its three edge subtrees are stages of
+        # one job that can overlap on idle cores, while this form
+        # serializes the edge/degree materialization ahead of the main
+        # job (measured 1.26x worse at sf0.1 in r13, when the xy form
+        # still scanned twice per subtree) — strictly less WORK is not
         # strictly less WALL-CLOCK until the cluster is saturated.
         edges = persist_tracked(edges)
         deg = persist_tracked(edges.groupBy("src").agg(F.count("*").alias("d")))
@@ -742,9 +732,10 @@ def _triangle_core(
 
     edges = persist_tracked(edge_plan)
     edges.count()  # materialize once — reused 3x (orient, close, count)
-    deg = (
-        edges.select(F.col("x").alias("v"))
-        .unionAll(edges.select(F.col("y").alias("v")))
+    # persisted: read by the orient join (both endpoints) and again by
+    # the caller's node-count and wedge-mass scalars
+    deg = persist_tracked(
+        edges.select(F.explode(F.array("x", "y")).alias("v"))
         .groupBy("v")
         .agg(F.count("*").alias("d"))
     )
@@ -1261,11 +1252,7 @@ def graph_connected_users(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
     pairs = _affinity_edge_list(spark, sf_dir)
-    nodes = (
-        pairs.select(F.col("a_id").alias("doc_id"))
-        .unionAll(pairs.select(F.col("b_id").alias("doc_id")))
-        .distinct()
-    )
+    nodes = pairs.select(F.explode(F.array("a_id", "b_id")).alias("doc_id")).distinct()
     comp = connected_components(spark, pairs, nodes)
     w = Window.partitionBy("cluster_id")
     return comp.select(
@@ -1336,12 +1323,7 @@ def graph_label_propagation(spark: SparkSession, sf_dir: str) -> DataFrame:
     LPA cost model — and `_LPA_ROUNDS` bounds latency like
     `graph_pagerank`'s fixed iteration count."""
     pairs = _affinity_edge_list(spark, sf_dir)
-    sym = catalog.persist_tracked(
-        pairs.select(F.col("a_id").alias("u"), F.col("b_id").alias("v"))
-        .unionAll(
-            pairs.select(F.col("b_id").alias("u"), F.col("a_id").alias("v"))
-        )
-    )
+    sym = catalog.persist_tracked(catalog.symmetrize(pairs, "a_id", "b_id"))
 
     def step(labels: DataFrame, _r: int) -> DataFrame:
         votes = (

@@ -42,6 +42,10 @@ def get_spark(app_name: str = "data-collection-ieee-spark") -> SparkSession:
         except (AttributeError, OSError):
             default_parts = str(os.cpu_count() or 32)
     shuffle_parts = os.environ.get("SPARK_GRAFT_SHUFFLE_PARTITIONS", default_parts)
+    # Python workers start with the process cwd, not the driver's
+    # sys.path, so a UDF that imports this package fails with
+    # ModuleNotFoundError unless the package root is on their path.
+    package_root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
     builder = (
         SparkSession.builder.master(f"local[{cpus}]")
         .appName(app_name)
@@ -52,6 +56,7 @@ def get_spark(app_name: str = "data-collection-ieee-spark") -> SparkSession:
         .config("spark.sql.session.timeZone", "UTC")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config("spark.ui.enabled", "false")
+        .config("spark.executorEnv.PYTHONPATH", package_root)
         .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEMORY", "8g"))
     )
     spark = builder.getOrCreate()
